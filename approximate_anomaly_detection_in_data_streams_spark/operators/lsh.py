@@ -105,8 +105,9 @@ def lsh_neighbor_pairs(
 ) -> DataFrame:
     """Approximate neighbor pairs: bucket-collision candidates, exact post-filter.
 
-    Same output contract as ``exact_neighbor_pairs`` (both directions), but a
-    pair appears only if the two points collide in >= 1 of the L tables while
+    Output (i, j, slide_i, slide_j): co-windowed neighbor pairs in both
+    directions (the input ``pairs_to_counts`` takes), but a pair appears
+    only if the two points collide in >= 1 of the L tables while
     co-windowed. Fully JVM-side after key generation:
 
       1. equi-join the (table, key, id-block)-exploded point table with

@@ -1,4 +1,4 @@
-"""Exact neighbor-pair generation: the windowed distance self-join (J1).
+"""Exact neighbor counting: the windowed distance self-join (J1).
 
 The reference answers "neighbors of p within R in the current window" with an
 in-heap M-tree range query per point (/root/reference/src/core/mtree/MTree.java:413-415).
@@ -11,8 +11,8 @@ The Spark-native equivalent is a *banded blockwise self-join*:
     block's points out to (own block as "home") and (previous block as
     "guest") — a 2x duplication, independent of n;
   * per block, compute pairwise Euclidean distances for <= 2W points in one
-    Arrow batch with chunked NumPy matrix math (no per-row Python), emit
-    pairs with dist <= R, both directions.
+    Arrow batch with chunked NumPy matrix math (no per-row Python), and
+    emit each point's count of neighbors (dist <= R) per neighbor slide.
 
 Total work is O(n * W * d / block) spread over n/W independent tasks —
 linear in n and embarrassingly parallel, which is what makes the two-cluster
@@ -25,58 +25,14 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
 
-PAIR_SCHEMA = "i long, j long, slide_i long, slide_j long"
-
 # Chunk of left-hand rows per distance-matrix block: bounds peak memory at
 # CHUNK * 2W doubles regardless of window size.
 CHUNK = 1024
-
-
-def _pairwise_emit(
-    X: np.ndarray,
-    ids: np.ndarray,
-    slides: np.ndarray,
-    home: np.ndarray,
-    r2: float,
-    max_slide_gap: int,
-) -> pd.DataFrame:
-    """Emit neighbor pairs (both directions) for one block's home+guest rows."""
-    sq = np.einsum("ij,ij->i", X, X)
-    out_i: list[np.ndarray] = []
-    out_j: list[np.ndarray] = []
-    home_idx = np.flatnonzero(home)
-    for start in range(0, len(home_idx), CHUNK):
-        rows = home_idx[start : start + CHUNK]
-        # squared distances rows x all, via ||a||^2 + ||b||^2 - 2ab
-        d2 = sq[rows, None] + sq[None, :] - 2.0 * (X[rows] @ X.T)
-        mask = d2 <= r2
-        # p must be home (rows are), q strictly later, slide gap < W/S
-        mask &= ids[None, :] > ids[rows, None]
-        mask &= (slides[None, :] - slides[rows, None]) <= max_slide_gap
-        pi, qj = np.nonzero(mask)
-        out_i.append(rows[pi])
-        out_j.append(qj)
-    if out_i:
-        ii = np.concatenate(out_i)
-        jj = np.concatenate(out_j)
-    else:
-        ii = np.empty(0, dtype=np.int64)
-        jj = ii
-    return pd.DataFrame(
-        {
-            "i": np.concatenate([ids[ii], ids[jj]]),
-            "j": np.concatenate([ids[jj], ids[ii]]),
-            "slide_i": np.concatenate([slides[ii], slides[jj]]),
-            "slide_j": np.concatenate([slides[jj], slides[ii]]),
-        }
-    )
-
 
 COUNT_SCHEMA = "i long, slide_i long, slide_j long, c long, c_arr long"
 
@@ -271,9 +227,9 @@ def exact_neighbor_counts(
     """Per-(point, neighbor-slide) neighbor counts — the exact detector's
     scalable aggregate input. Output: (i, slide_i, slide_j, c, c_arr).
 
-    Same banded block layout as ``exact_neighbor_pairs`` (2x fan-out,
-    <= 2W points per task), but each task emits O(points x ws) count rows
-    instead of O(points x W) pairs.
+    Banded block layout of the module docstring (2x fan-out, <= 2W points
+    per task); each task emits O(points x ws) count rows, never the
+    O(points x W) pairs themselves.
     """
     ws = cfg.ws
     r2 = float(cfg.r) * float(cfg.r)
@@ -365,44 +321,3 @@ def pairs_to_counts(pairs: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("c"),
         F.sum(F.when(F.col("j") < F.col("i"), 1).otherwise(0)).alias("c_arr"),
     )
-
-
-def exact_neighbor_pairs(points_with_slide: DataFrame, cfg: DetectorConfig) -> DataFrame:
-    """All ordered pairs (i, j) with dist <= R that ever share a window.
-
-    Input: (id, features, slide). Output: (i, j, slide_i, slide_j), both
-    (p,q) and (q,p) for each unordered neighbor pair — downstream
-    aggregations are per neighbor-list owner ``i``.
-    """
-    ws = cfg.ws
-    r2 = float(cfg.r) * float(cfg.r)
-    max_gap = ws - 1
-
-    block = ((F.col("slide") - 1) / F.lit(ws)).cast("long")
-    base = points_with_slide.select("id", "features", "slide")
-    fanned = base.withColumn("g", block).withColumn("is_home", F.lit(True)).unionByName(
-        base.withColumn("g", block - 1)
-        .withColumn("is_home", F.lit(False))
-        .where(F.col("g") >= 0)
-    )
-
-    empty = pd.DataFrame(
-        {
-            "i": pd.Series(dtype="int64"),
-            "j": pd.Series(dtype="int64"),
-            "slide_i": pd.Series(dtype="int64"),
-            "slide_j": pd.Series(dtype="int64"),
-        }
-    )
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return empty
-        order = np.argsort(pdf["id"].to_numpy())
-        ids = pdf["id"].to_numpy()[order]
-        slides = pdf["slide"].to_numpy()[order]
-        home = pdf["is_home"].to_numpy()[order]
-        X = np.stack(pdf["features"].to_numpy()[order]).astype(np.float64)
-        return _pairwise_emit(X, ids, slides, home, r2, max_gap)
-
-    return fanned.groupBy("g").applyInPandas(emit, PAIR_SCHEMA)

@@ -5,18 +5,22 @@ Two layers:
   * ``SlideDetector`` — an incremental engine processing one slide-sized
     batch at a time, mirroring the reference's driver loop
     (/root/reference/src/Executor.java:112-114: ingest S points, expire,
-    re-evaluate) with vectorized NumPy instead of per-point index
-    maintenance. State = the current window's points + per-point lifetime
-    flags; everything else is recomputed per batch (the event queue /
-    micro-cluster machinery exists only to speed up single-threaded
-    incrementality — SURVEY.md section 4).
+    re-evaluate). Each window point carries a neighbor-count vector of
+    ``ws = W/S`` bins, one per window slide, ring-indexed by
+    ``slide % ws`` — the slide-binned count contract of the batch kernel
+    (operators/pairs.py::_counts_emit) and the reference's
+    ``count_after``/``nn_before`` bookkeeping. A new slide costs one
+    S x (n+S) distance plane, each pair's one distance credited to both
+    ends; expiry zeroes one bin; the pre- and end-evaluation counts are
+    row sums of the bins. Nothing is recounted.
   * ``run_structured_stream`` — Structured Streaming wrapper over the
     distributed keyed dataflow (streaming/keyed.py): state lives in
     Spark's state store via ``applyInPandasWithState``, one SlideDetector
     per key, no driver-side collect anywhere in the plan.
 
-Verified equivalent to the batch detector (tests/test_streaming.py):
-same pure-outlier set, same lifetime stats.
+Verified equivalent to the batch detector (tests/test_streaming.py) and to
+``oracle.brute.mcod_brute`` (tests/test_property.py): same pure-outlier set,
+same lifetime stats.
 """
 
 from __future__ import annotations
@@ -27,11 +31,9 @@ import numpy as np
 
 from ..config import DetectorConfig
 
-
-@dataclass
-class _PointState:
-    ever_inlier: bool = False
-    ever_outlier: bool = False
+# Elements of one distance-plane chunk (new rows x window columns): bounds
+# the plane's float64 temporaries at a few tens of MB at any window size.
+PLANE_ELEMS = 1 << 21
 
 
 @dataclass
@@ -39,11 +41,15 @@ class SlideDetector:
     """Incremental count-based sliding-window distance outlier detector."""
 
     cfg: DetectorConfig
-    # window arrays (id-ascending)
+    # window rows in arrival order (slides oldest first)
     _ids: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-    _slides: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
     _X: np.ndarray | None = None
-    _state: dict[int, _PointState] = field(default_factory=dict)
+    # rows per window slide, oldest first (at most ws entries)
+    _slide_rows: list[int] = field(default_factory=list)
+    # (n, ws) int32: neighbors of each row in window slide s, at column s % ws
+    _bins: np.ndarray = field(init=False)
+    _ever_inlier: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=bool))
+    _ever_outlier: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=bool))
     _outliers: set[int] = field(default_factory=set)
     _batch: int = 0
     _finalized: dict[str, int] = field(
@@ -54,117 +60,129 @@ class SlideDetector:
     # processed batch with window population and work counters
     diagnostics: list[dict] = field(default_factory=list)
 
-    def _allowed(self, X: np.ndarray) -> np.ndarray | None:
-        """Candidate mask hook: (n, n) bool of pairs the detector may count
-        as neighbors, or None for the exact all-pairs semantics (MCOD).
-        LSHSlideDetector overrides with bucket-collision candidates."""
-        return None
+    def __post_init__(self) -> None:
+        self._bins = np.zeros((0, self.cfg.ws), dtype=np.int32)
+        self._sq = np.empty(0)
 
-    def _counts(self, X: np.ndarray, ids: np.ndarray) -> np.ndarray:
-        """Neighbor counts (dist <= R) of each row among all rows, self
-        excluded — one blocked pairwise pass per batch."""
-        if len(ids) == 0:
-            return np.empty(0, dtype=np.int64)
-        r2 = float(self.cfg.r) ** 2
-        sq = np.einsum("ij,ij->i", X, X)
-        out = np.empty(len(ids), dtype=np.int64)
-        allowed = self._allowed(X)
-        chunk = 2048
-        for s in range(0, len(ids), chunk):
-            d2 = sq[s : s + chunk, None] + sq[None, :] - 2.0 * (X[s : s + chunk] @ X.T)
-            m = d2 <= r2
-            if allowed is not None:
-                m &= allowed[s : s + chunk]
-            m[np.arange(m.shape[0]), np.arange(s, s + m.shape[0])] = False
-            out[s : s + chunk] = m.sum(axis=1)
-        return out
+    # -- keyed state: derivable arrays are rebuilt, not pickled ------------
+    _DERIVED = ("_sq",)
 
-    def _mark(self, ids: np.ndarray, counts: np.ndarray, end_eval: bool) -> None:
-        k = self.cfg.k
-        for pid, cnt in zip(ids.tolist(), counts.tolist()):
-            st = self._state[pid]
-            if cnt >= k:
-                if end_eval:
-                    st.ever_inlier = True
-            else:
-                st.ever_outlier = True
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if k not in self._DERIVED}
 
-    def _finalize(self, pid: int) -> None:
-        st = self._state.pop(pid)
-        if st.ever_inlier and not st.ever_outlier:
-            self._finalized["only_inlier"] += 1
-        elif st.ever_outlier and not st.ever_inlier:
-            self._finalized["only_outlier"] += 1
-        else:
-            self._finalized["both"] += 1
-        if not st.ever_inlier:
-            self._outliers.add(pid)
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._sq = self._norms(self._X) if self._X is not None else np.empty(0)
 
+    @staticmethod
+    def _norms(X: np.ndarray) -> np.ndarray:
+        return np.einsum("ij,ij->i", X, X)
+
+    # -- window rows ---------------------------------------------------------
+    def _append(self, ids: np.ndarray, X: np.ndarray) -> None:
+        """Add a slide's rows with empty bins and lifetime flags."""
+        n = len(ids)
+        self._ids = np.concatenate([self._ids, ids])
+        self._X = X if self._X is None or not len(self._X) else np.vstack([self._X, X])
+        self._sq = np.concatenate([self._sq, self._norms(X)])
+        self._bins = np.vstack([self._bins, np.zeros((n, self.cfg.ws), dtype=np.int32)])
+        self._ever_inlier = np.concatenate([self._ever_inlier, np.zeros(n, dtype=bool)])
+        self._ever_outlier = np.concatenate([self._ever_outlier, np.zeros(n, dtype=bool)])
+
+    def _retire(self, n: int) -> None:
+        """Finalize the window's ``n`` oldest rows (lifetime counters and
+        pure outliers, reference src/core/OutlierDetector.java:43-62) and
+        drop them."""
+        ei, eo = self._ever_inlier[:n], self._ever_outlier[:n]
+        only_in = int(np.count_nonzero(ei & ~eo))
+        only_out = int(np.count_nonzero(eo & ~ei))
+        self._finalized["only_inlier"] += only_in
+        self._finalized["only_outlier"] += only_out
+        self._finalized["both"] += n - only_in - only_out
+        self._outliers.update(self._ids[:n][~ei].tolist())
+        self._ids = self._ids[n:]
+        self._X = self._X[n:]
+        self._sq = self._sq[n:]
+        self._bins = self._bins[n:]
+        self._ever_inlier = self._ever_inlier[n:]
+        self._ever_outlier = self._ever_outlier[n:]
+
+    def _prune(self, M: np.ndarray, r0: int) -> np.ndarray:
+        """Candidate hook: ``M`` holds the within-R pairs of window rows
+        ``r0 .. r0+len(M)`` against the whole window; return the pairs the
+        detector may count. Exact MCOD counts all of them."""
+        return M
+
+    # -- one slide -----------------------------------------------------------
     def process_batch(self, ids: np.ndarray, X: np.ndarray) -> None:
         """Ingest one slide-sized batch (the reference's
         ProcessNewStreamObjects, /root/reference/src/algorithms/MCOD.java:302-317):
         expire, pre-re-evaluate survivors, arrival-evaluate new points,
         end-evaluate the full window."""
         cfg = self.cfg
+        ws, k = cfg.ws, cfg.k
         self._batch += 1
         b = self._batch
         ids = np.asarray(ids, dtype=np.int64)
         X = np.asarray(X, dtype=np.float64)
 
-        # expiry: window after this batch holds slides [b-ws+1 .. b]
-        min_slide = b - cfg.ws + 1
-        if self._X is not None and len(self._ids):
-            expired = self._slides < min_slide
-            for pid in self._ids[expired].tolist():
-                self._finalize(pid)
-            keep = ~expired
-            self._ids = self._ids[keep]
-            self._slides = self._slides[keep]
-            self._X = self._X[keep]
+        # expiry: the window after this batch holds slides [b-ws+1 .. b], so
+        # slide b-ws leaves; its ring bin b % ws is reused for slide b
+        if len(self._slide_rows) == ws:
+            self._retire(self._slide_rows.pop(0))
+        own = b % ws
+        self._bins[:, own] = 0
 
-            # pre re-evaluation of survivors (event-queue drain analog,
-            # /root/reference/src/algorithms/MCOD.java:228-261) — only
-            # meaningful when something expired
-            if b > 1:
-                counts = self._counts(self._X, self._ids)
-                self._mark(self._ids, counts, end_eval=False)
+        # pre re-evaluation of survivors (event-queue drain analog,
+        # reference src/algorithms/MCOD.java:228-261)
+        self._ever_outlier |= self._bins.sum(axis=1) < k
 
-        # arrival evaluations: new point vs survivors + earlier same-batch
-        for pid in ids.tolist():
-            self._state[pid] = _PointState()
-        if self._X is None or not len(self._ids):
-            win_X, win_ids = X, ids
-        else:
-            win_X = np.vstack([self._X, X])
-            win_ids = np.concatenate([self._ids, ids])
-        n_old = len(win_ids) - len(ids)
-        sq = np.einsum("ij,ij->i", win_X, win_X)
+        # new slide: one distance per (new, window) pair, in row chunks
+        n_old = len(self._ids)
+        first = b - len(self._slide_rows)  # slide of the oldest survivor
+        edges = np.cumsum([0] + self._slide_rows)
+        self._slide_rows.append(len(ids))
+        self._append(ids, X)
+        n_new = len(ids)
+        Xw, sq, bins = self._X, self._sq, self._bins
         r2 = float(cfg.r) ** 2
-        k = cfg.k
-        allowed = self._allowed(win_X)
-        for i in range(len(ids)):
-            gi = n_old + i
-            d2 = sq[:gi] + sq[gi] - 2.0 * (win_X[:gi] @ win_X[gi])
-            ok = d2 <= r2
-            if allowed is not None:
-                ok &= allowed[gi, :gi]
-            cnt = int(ok.sum())
-            if cnt < k:
-                self._state[int(ids[i])].ever_outlier = True
+        new_own = np.zeros(n_new, dtype=np.int64)
+        arrival = np.zeros(n_new, dtype=np.int64)
+        step = max(1, PLANE_ELEMS // max(len(Xw), 1))
+        for c0 in range(0, n_new, step):
+            c1 = min(c0 + step, n_new)
+            r0 = n_old + c0
+            # same arithmetic as the batch kernel and oracle.brute
+            d2 = sq[r0 : n_old + c1, None] + sq[None, : n_old + c1] - 2.0 * (
+                Xw[r0 : n_old + c1] @ Xw[: n_old + c1].T
+            )
+            M = self._prune(d2 <= r2, r0)
+            # survivors: new rows get a bin per survivor slide, survivors
+            # add their column to the new slide's bin
+            for g in range(len(edges) - 1):
+                c = np.count_nonzero(M[:, edges[g] : edges[g + 1]], axis=1)
+                bins[r0 : n_old + c1, (first + g) % ws] = c
+                arrival[c0:c1] += c
+            bins[:n_old, own] += np.count_nonzero(M[:, :n_old], axis=0).astype(np.int32)
+            # same batch: the strict lower triangle (earlier arrivals) is the
+            # one distance per pair, credited to both ends
+            low = np.tril(M[:, n_old:], k=c0 - 1)
+            prefix = np.count_nonzero(low, axis=1)
+            arrival[c0:c1] += prefix
+            new_own[c0:c1] += prefix
+            new_own[:c1] += np.count_nonzero(low, axis=0)
+        bins[n_old:, own] = new_own
+        self._ever_outlier[n_old:] |= arrival < k
 
-        # end evaluations for the whole window
-        self._ids = win_ids
-        self._slides = np.concatenate(
-            [self._slides, np.full(len(ids), b, dtype=np.int64)]
-        ) if n_old else np.full(len(ids), b, dtype=np.int64)
-        self._X = win_X
-        counts = self._counts(self._X, self._ids)
-        self._mark(self._ids, counts, end_eval=True)
+        # end evaluation of the whole window
+        end = bins.sum(axis=1)
+        self._ever_inlier |= end >= k
+        self._ever_outlier |= end < k
         self.diagnostics.append(
             {
                 "batch": b,
                 "window_size": int(len(self._ids)),
-                "n_new": int(len(ids)),
+                "n_new": n_new,
                 "n_outliers_recorded": len(self._outliers),
             }
         )
@@ -172,11 +190,9 @@ class SlideDetector:
     def finish(self) -> dict:
         """Stream exhausted: final flush (W4,
         /root/reference/src/core/OutlierDetector.java:43-47)."""
-        for pid in self._ids.tolist():
-            self._finalize(pid)
-        self._ids = np.empty(0, dtype=np.int64)
-        self._slides = np.empty(0, dtype=np.int64)
-        self._X = None
+        if self._X is not None:
+            self._retire(len(self._ids))
+        self._slide_rows.clear()
         return {
             "outliers": sorted(self._outliers),
             "n_only_inlier": self._finalized["only_inlier"],
@@ -198,36 +214,57 @@ class LSHSlideDetector(SlideDetector):
     identical IEEE op order as the batch path's JVM fold — so bucket keys
     (and therefore the outlier set) are bit-equivalent to the batch LSHOD
     detector (tests/test_streaming.py::test_lshod_slide_loop_matches_batch).
+    Keys are computed once per point, on arrival.
     """
 
     dim: int = 1
 
+    _DERIVED = ("_sq", "_A", "_b", "_keys")
+
     def __post_init__(self) -> None:
+        super().__post_init__()
+        self._init_keys()
+
+    def __setstate__(self, state: dict) -> None:
+        super().__setstate__(state)
+        self._init_keys()
+
+    def _init_keys(self) -> None:
         from ..operators.lsh import make_projections
 
         self._A, self._b = make_projections(self.cfg, self.dim)
-        self._w = float(self.cfg.lsh_bucket_width)
+        self._keys = self._hash(self._X if self._X is not None else np.empty((0, self.dim)))
 
-    def _allowed(self, X: np.ndarray) -> np.ndarray | None:
-        n = len(X)
-        L, m, d = self._A.shape
-        keys = np.empty((L, m, n), dtype=np.float64)
-        for t in range(L):
-            for i in range(m):
-                acc = X[:, 0] * self._A[t, i, 0]
-                for j in range(1, d):
-                    acc = acc + X[:, j] * self._A[t, i, j]
-                keys[t, i] = np.floor((acc + self._b[t, i]) / self._w)
-        coll = np.zeros((n, n), dtype=bool)
-        same = np.empty((n, n), dtype=bool)
-        for t in range(L):
-            kk = keys[t, 0]
-            np.equal(kk[:, None], kk[None, :], out=same)
-            for i in range(1, m):
-                kk = keys[t, i]
-                same &= kk[:, None] == kk[None, :]
-            coll |= same
-        return coll
+    def _hash(self, X: np.ndarray) -> np.ndarray:
+        """(L, m, n) bucket keys: floor((a . x + b) / w), the dot product
+        folded left to right over dims."""
+        A = self._A
+        acc = X[:, 0] * A[:, :, 0, None]
+        for j in range(1, A.shape[2]):
+            acc = acc + X[:, j] * A[:, :, j, None]
+        return np.floor((acc + self._b[:, :, None]) / float(self.cfg.lsh_bucket_width))
+
+    def _append(self, ids: np.ndarray, X: np.ndarray) -> None:
+        super()._append(ids, X)
+        self._keys = np.concatenate([self._keys, self._hash(X)], axis=2)
+
+    def _retire(self, n: int) -> None:
+        super()._retire(n)
+        self._keys = self._keys[:, :, n:]
+
+    def _prune(self, M: np.ndarray, r0: int) -> np.ndarray:
+        # table by table, drop the within-R pairs that collide there; what
+        # is left after the last table never collided
+        ri, cj = np.nonzero(M)
+        ri = ri + r0
+        keys = self._keys
+        for t in range(keys.shape[0]):
+            same = keys[t, 0, ri] == keys[t, 0, cj]
+            for i in range(1, keys.shape[1]):
+                same &= keys[t, i, ri] == keys[t, i, cj]
+            ri, cj = ri[~same], cj[~same]
+        M[ri - r0, cj] = False
+        return M
 
 
 def make_slide_detector(cfg: DetectorConfig, dim: int) -> SlideDetector:

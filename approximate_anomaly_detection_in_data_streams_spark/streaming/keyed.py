@@ -3,7 +3,7 @@ state held in Spark's state store via ``applyInPandasWithState``.
 
 This is the scale path for streaming detection: keys partition across
 executors, each key's state is exactly one ``SlideDetector`` (bounded by
-W x dim) plus an out-of-order re-sequencing buffer, and NO data ever
+W x (dim + W/S)) plus an out-of-order re-sequencing buffer, and NO data ever
 flows through the driver — unlike the reference's single-threaded loop
 (/root/reference/src/Executor.java:112-126), a thousand independent
 streams cost one shuffle by key.
@@ -47,10 +47,12 @@ def _keyed_func(cfg: DetectorConfig):
 
     The engine is algorithm-routed (``make_slide_detector``: exact MCOD or
     LSH-bucketed LSHOD) and constructed LAZILY on the first data row so the
-    LSH variant can infer ``dim`` from the stream when ``cfg.dim`` is 0 —
-    the same inference the reference does by probing the first stream
-    object (/root/reference/src/core/Stream.java:16-22), paid once per key
-    instead of once per plan."""
+    key's ``dim`` can come from the stream when ``cfg.dim`` is 0 — the
+    first non-empty feature vector sets it, the same inference the
+    reference does by probing the first stream object (reference
+    src/core/Stream.java:16-22), paid once per key instead of once per
+    plan. A point of any other length fails the key with a
+    ``ValueError`` naming the key, the id and both lengths."""
 
     def func(key, pdfs, state):
         if state.exists:
@@ -58,6 +60,7 @@ def _keyed_func(cfg: DetectorConfig):
         else:
             st = {
                 "det": None,
+                "dim": 0,
                 "pending": {},
                 "next": 1,
                 "expected": None,
@@ -72,12 +75,24 @@ def _keyed_func(cfg: DetectorConfig):
                     st["pending"][pid] = np.asarray(feats, dtype=np.float64)
 
         if st["det"] is None:
-            if not st["pending"]:
-                # sentinel-only trigger before any data: nothing to process
+            sized = [p for p, v in st["pending"].items() if len(v)]
+            if not (cfg.dim or sized):
+                # no feature vector yet (e.g. a sentinel-only trigger)
                 state.update((pickle.dumps(st),))
                 return
-            dim = cfg.dim or len(next(iter(st["pending"].values())))
-            st["det"] = make_slide_detector(cfg, dim)
+            # the first non-empty vector of the stream sets the key's dim
+            st["dim"] = cfg.dim or len(st["pending"][min(sized)])
+            st["det"] = make_slide_detector(cfg, st["dim"])
+
+        def pop_slide(ids: list[int]) -> np.ndarray:
+            rows = [st["pending"].pop(i) for i in ids]
+            for pid, v in zip(ids, rows):
+                if len(v) != st["dim"]:
+                    raise ValueError(
+                        f"stream key {key[0]!r}: point id {pid} has {len(v)} "
+                        f"features, but the key's dim is {st['dim']}"
+                    )
+            return np.stack(rows)
 
         det: SlideDetector = st["det"]
         S = cfg.slide
@@ -86,8 +101,7 @@ def _keyed_func(cfg: DetectorConfig):
             ids = list(range(st["next"], st["next"] + S))
             if not all(i in st["pending"] for i in ids):
                 break
-            X = np.stack([st["pending"].pop(i) for i in ids])
-            det.process_batch(np.asarray(ids, dtype=np.int64), X)
+            det.process_batch(np.asarray(ids, dtype=np.int64), pop_slide(ids))
             st["next"] += S
 
         rows = []
@@ -99,8 +113,7 @@ def _keyed_func(cfg: DetectorConfig):
             tail = list(range(st["next"], st["expected"] + 1))
             if all(i in st["pending"] for i in tail):
                 if tail:
-                    X = np.stack([st["pending"].pop(i) for i in tail])
-                    det.process_batch(np.asarray(tail, dtype=np.int64), X)
+                    det.process_batch(np.asarray(tail, dtype=np.int64), pop_slide(tail))
                     st["next"] = st["expected"] + 1
                 res = det.finish()
                 st["done"] = True
@@ -116,7 +129,7 @@ def _keyed_func(cfg: DetectorConfig):
         # and per-batch diagnostics are DRAINED from the pickled state:
         # both grow monotonically with stream length, and carrying them
         # would inflate the state blob every trigger even at a fixed
-        # window (state size must be bounded by W x dim + pending —
+        # window (state size must be bounded by W x (dim + W/S) + pending —
         # asserted in tests/test_streaming.py::test_keyed_state_size_flat).
         rows = [
             (key[0], "outlier", int(i)) for i in sorted(det._outliers)

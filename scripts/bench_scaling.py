@@ -33,7 +33,7 @@ phases (measured 1.3-4.5x wall swings on identical code+input, BENCH.md
 round-4 forensics), so a single best-of pair conflates the engine with the
 phase it sampled. The median protocol brackets EVERY leg with a pinned
 single-core memory-bandwidth probe (the contended resource per those same
-forensics); a rep's four probes must all fall within --probe-tol of the
+forensics); a rep's three probes must all fall within --probe-tol of the
 session's calibrated quiet-phase floor or the rep is discarded as
 phase-poisoned. It keeps interleaving (lo, hi, lo, hi, ...) until
 --target-pairs accepted reps exist (or --max-reps attempts), then reports
@@ -583,10 +583,18 @@ def main() -> None:
              "target": ">= 0.8 (median over accepted reps)"}
         )
         print(json.dumps(result))
+        label = f"{n} (median protocol{'' if stage == 'full' else f', {stage}'})"
         with open("BENCH.md", "a") as fh:
+            if not result["reps_accepted"]:
+                fh.write(
+                    f"\n| {label} | {lo}->{hi} | no accepted reps: all "
+                    f"{result['reps_run']} had a probe over {probe_tol} x the "
+                    f"floor {result['probe_floor_s']} s "
+                    f"(all: {result['efficiencies_all']}) | | | | |"
+                )
+                return
             fh.write(
-                f"\n| {n} (median protocol"
-                f"{'' if stage == 'full' else f', {stage}'}) | {lo}->{hi} | "
+                f"\n| {label} | {lo}->{hi} | "
                 f"{result['best_accepted_wall_lo']} | "
                 f"{result['best_accepted_wall_hi']} | "
                 f"{result['images_per_s_lo']} | {result['images_per_s_hi']} | "

@@ -317,3 +317,119 @@ def test_keyed_state_size_flat():
     # after the window fills (trigger >= 4), blob size must be flat
     steady = sizes[5:]
     assert max(steady) - min(steady) <= 0.1 * min(steady), sizes[:8] + sizes[-3:]
+
+
+class _FakeState:
+    """The slice of Spark's GroupState that ``_keyed_func`` uses."""
+
+    def __init__(self):
+        self.blob = None
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def update(self, t):
+        self.blob = t[0]
+
+
+def _dup_stream(n: int, seed: int) -> np.ndarray:
+    """2-d stream where most rows repeat an earlier vector exactly."""
+    rng = np.random.default_rng(seed)
+    base = rng.normal(0, 1, size=(n // 4, 2))
+    return base[rng.integers(0, len(base), n)]
+
+
+def test_slide_bins_match_brute_recount(gauss2d):
+    """After every batch, each window point's bin for window slide s holds
+    exactly its neighbors among slide s (a brute-force recount of the
+    current window) — so bin drift that never flips an outlier still
+    fails. Streams: duplicate vectors and gauss2d, both ending in a
+    partial slide."""
+    from approximate_anomaly_detection_in_data_streams_spark.oracle.brute import _dist2
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.incremental import (
+        SlideDetector,
+    )
+
+    cfg = DetectorConfig(w=60, slide=20, r=0.5, k=8)
+    for X in (_dup_stream(250, 7), gauss2d[:250]):
+        det = SlideDetector(cfg)
+        ids = np.arange(1, len(X) + 1)
+        for start in range(0, len(X), cfg.slide):
+            det.process_batch(ids[start : start + cfg.slide], X[start : start + cfg.slide])
+            wids = det._ids
+            lo = max(0, (start // cfg.slide - cfg.ws + 1) * cfg.slide)
+            assert wids.tolist() == ids[lo : start + cfg.slide].tolist()
+            near = _dist2(X[wids - 1], X[wids - 1]) <= cfg.r**2
+            np.fill_diagonal(near, False)
+            slides = (wids - 1) // cfg.slide + 1
+            for s in np.unique(slides):
+                exp = near[:, slides == s].sum(axis=1)
+                assert det._bins[:, s % cfg.ws].tolist() == exp.tolist()
+            assert det._bins.sum(axis=1).tolist() == near.sum(axis=1).tolist()
+
+
+@pytest.mark.parametrize("cfg", [CFG, LSHOD_CFG], ids=["mcod", "lshod"])
+def test_detector_pickled_every_slide_finishes_identically(gauss2d, cfg):
+    """Keyed streams pickle the detector into the state store every
+    trigger; a detector round-tripped through pickle after every slide
+    (derived arrays rebuilt on load) must finish exactly like one that
+    never left memory."""
+    import pickle
+
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.incremental import (
+        make_slide_detector,
+    )
+
+    X = gauss2d[:330]  # ends in a partial slide
+    ids = np.arange(1, len(X) + 1)
+    kept, moved = make_slide_detector(cfg, 2), make_slide_detector(cfg, 2)
+    for start in range(0, len(X), cfg.slide):
+        sl = slice(start, start + cfg.slide)
+        kept.process_batch(ids[sl], X[sl])
+        moved.process_batch(ids[sl], X[sl])
+        assert np.array_equal(moved._bins, kept._bins)
+        moved = pickle.loads(pickle.dumps(moved))
+    assert moved.finish() == kept.finish()
+    assert moved.diagnostics == kept.diagnostics
+
+
+@pytest.mark.parametrize("algorithm", ["mcod", "lshod"])
+def test_keyed_dim_from_first_nonempty_vector(algorithm):
+    """With ``cfg.dim = 0`` the key's dim comes from its first non-empty
+    feature vector; a point of another length (an empty vector included)
+    fails with a ValueError naming the key, the id and both lengths."""
+    import pandas as pd
+
+    from approximate_anomaly_detection_in_data_streams_spark.streaming.keyed import (
+        _keyed_func,
+    )
+
+    cfg = DetectorConfig(w=20, slide=10, r=0.5, k=3, algorithm=algorithm)
+    rng = np.random.default_rng(5)
+
+    def trigger(func, state, ids, dims):
+        pdf = pd.DataFrame(
+            {"id": ids, "features": [rng.normal(size=d).tolist() for d in dims]}
+        )
+        return list(func(("k1",), iter([pdf]), state))
+
+    # a sentinel-only trigger first, then a clean 3-slide stream
+    func, state = _keyed_func(cfg), _FakeState()
+    trigger(func, state, [-30], [0])
+    out = trigger(func, state, list(range(1, 31)), [4] * 30)
+    assert any((o["kind"] == "n_only_inlier").any() for o in out)
+
+    # empty first vector: dim 4 comes from id 2, id 1 is the mismatch
+    with pytest.raises(ValueError, match=r"'k1'.* id 1 has 0 features.*dim is 4"):
+        trigger(_keyed_func(cfg), _FakeState(), list(range(1, 11)), [0] + [4] * 9)
+
+    # a short vector in the second slide
+    func, state = _keyed_func(cfg), _FakeState()
+    trigger(func, state, list(range(1, 11)), [4] * 10)
+    with pytest.raises(ValueError, match=r"'k1'.* id 13 has 3 features.*dim is 4"):
+        trigger(func, state, list(range(11, 21)), [4, 4, 3] + [4] * 7)
