@@ -109,10 +109,15 @@ def run_validation(
         report = validate_images(subset, reference=reference, cfg=cfg)
         pdir = _partition_dir(checkpoint_dir, key)
         os.makedirs(pdir, exist_ok=True)
-        report.violations.write.mode("overwrite").parquet(
-            os.path.join(pdir, "violations.parquet")
-        )
-        verdict_rows = report.partition_verdicts.collect()
+        try:
+            report.violations.write.mode("overwrite").parquet(
+                os.path.join(pdir, "violations.parquet")
+            )
+            verdict_rows = report.partition_verdicts.collect()
+        finally:
+            # release this partition's cached stages: a long run would
+            # otherwise hold every validated partition's frames
+            report.unpersist_all()
         n_viol = spark.read.parquet(os.path.join(pdir, "violations.parquet")).count()
         n_rows = sum(r["n_rows"] for r in verdict_rows)
         passed = all(r["passed"] for r in verdict_rows) and report.schema_ok

@@ -177,6 +177,10 @@ def approx_mcod_detect(points: DataFrame, cfg: DetectorConfig) -> DetectionResul
         ),
         F.count(F.lit(1)).alias("n_points"),
     )
+    # evaluations are eager here: the verdicts are built from them
     return DetectionResult(
-        evaluations=evals, outliers=outliers, per_point=per_point, stats=stats
+        outliers=outliers,
+        per_point=per_point,
+        stats=stats,
+        build_evaluations=lambda: evals,
     )

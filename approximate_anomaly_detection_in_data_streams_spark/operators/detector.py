@@ -43,9 +43,11 @@ require serializing the exact single-threaded reinsertion order.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
@@ -55,12 +57,21 @@ from .windows import n_batches, point_batches, with_slide
 
 @dataclass
 class DetectionResult:
-    """Lazy DataFrames for every stage of one detection run."""
+    """Lazy DataFrames for every stage of one detection run.
 
-    evaluations: DataFrame  # (id, b, kind, cnt, is_inlier)
+    ``evaluations`` is planned on first read only: the verdict path never
+    consumes it, and building its plan costs py4j round-trips (and, without
+    ``cfg.n_total``, a ``max(id)`` job for the batch count)."""
+
     outliers: DataFrame  # (id) ascending — the violation set (K1 sink shape)
     per_point: DataFrame  # (id, ever_inlier, ever_outlier)
     stats: DataFrame  # single row of lifetime counters (K2 sink shape)
+    build_evaluations: Callable[[], DataFrame] = field(repr=False)
+
+    @cached_property
+    def evaluations(self) -> DataFrame:
+        """(id, b, kind, cnt, is_inlier) evaluation rows."""
+        return self.build_evaluations()
 
 
 def batch_counts(counts: DataFrame, cfg: DetectorConfig, b_total: int) -> DataFrame:
@@ -177,11 +188,33 @@ def _with_zero_rows(
     ).unionByName(zeros)
 
 
+def _with_last_batch(
+    per_id: DataFrame,
+    points_with_slide: DataFrame,
+    cfg: DetectorConfig,
+    b_total: int | None,
+) -> tuple[DataFrame, Column]:
+    """``per_id`` plus the total batch count B as a column expression.
+
+    A known ``b_total`` (or ``cfg.n_total``) gives a literal. Otherwise
+    B = ceil(max(id) / S) is computed in-plan from a one-row aggregate
+    broadcast onto ``per_id``, so building the plan runs no job
+    (``windows.n_batches`` would block on ``agg(max(id)).first()``)."""
+    if b_total is None and cfg.n_total:
+        b_total = n_batches(points_with_slide, cfg)
+    if b_total is not None:
+        return per_id, F.lit(b_total)
+    last = points_with_slide.agg(
+        F.expr(f"(max(id) + {cfg.slide - 1}) div {cfg.slide}").alias("_b_total")
+    )
+    return per_id.crossJoin(F.broadcast(last)), F.col("_b_total")
+
+
 def per_point_verdicts(
     points_with_slide: DataFrame,
     slide_counts: DataFrame,
     cfg: DetectorConfig,
-    b_total: int,
+    b_total: int | None = None,
 ) -> DataFrame:
     """Fused per-point (ever_inlier, ever_outlier) — the scale path.
 
@@ -212,6 +245,10 @@ def per_point_verdicts(
     by the map-side combine of the aggregation shuffle that already
     exists. That removes the O(n) base-side shuffle + sort-merge join
     the fallback path pays to re-attach points with no count rows.
+
+    ``b_total`` (the batch count B) may be None: B then comes from
+    ``cfg.n_total``, or else from ``max(id)`` inside the plan (see
+    ``_with_last_batch``).
     """
     ws, k = cfg.ws, cfg.k
     if ws <= 24:
@@ -247,8 +284,9 @@ def per_point_verdicts(
     else:
         base = points_with_slide.select("id", "slide")
         joined = base.join(per_id.drop("slide"), "id", "left")
+    joined, last = _with_last_batch(joined, points_with_slide, cfg, b_total)
     n_b = (
-        F.least(F.lit(b_total), F.col("slide") + F.lit(ws - 1))
+        F.least(last, F.col("slide") + F.lit(ws - 1))
         - F.col("slide")
         + 1
     ).cast("int")
@@ -300,7 +338,7 @@ def _per_point_verdicts_pivoted(
     points_with_slide: DataFrame,
     slide_counts: DataFrame,
     cfg: DetectorConfig,
-    b_total: int,
+    b_total: int | None,
 ) -> DataFrame:
     """Unrolled per-point verdicts (see per_point_verdicts): the 2*ws-1
     neighbor-count bins become conditional-sum columns in one groupBy and
@@ -331,8 +369,9 @@ def _per_point_verdicts_pivoted(
     else:
         base = points_with_slide.select("id", "slide")
         joined = base.join(per_id.drop("slide"), "id", "left")
+    joined, last = _with_last_batch(joined, points_with_slide, cfg, b_total)
     n_b = (
-        F.least(F.lit(b_total), F.col("slide") + F.lit(ws - 1))
+        F.least(last, F.col("slide") + F.lit(ws - 1))
         - F.col("slide")
         + 1
     ).cast("int")
@@ -441,17 +480,16 @@ def detect(
     lsh_neighbor_counts); ``pairs`` may inject a raw neighbor-pair table.
     The exact path skips pair materialization entirely and aggregates
     slide-binned counts inside the block kernel. The verdict aggregation
-    uses the fused per-point path; ``evaluations`` stays available
-    (lazily) for diagnostics and property tests."""
+    uses the fused per-point path; ``evaluations`` is planned on first
+    read, for diagnostics and property tests. Building the result runs no
+    Spark job: without ``cfg.n_total`` the batch count is derived in-plan."""
     pts = with_slide(points, cfg)
-    b_total = n_batches(points, cfg)
     if slide_counts is None:
         slide_counts = (
             exact_neighbor_counts(pts, cfg) if pairs is None else pairs_to_counts(pairs)
         )
 
-    evals = evaluations(pts, slide_counts, cfg, b_total)
-    per_point = per_point_verdicts(pts, slide_counts, cfg, b_total)
+    per_point = per_point_verdicts(pts, slide_counts, cfg)
     outliers = (
         per_point.where(~F.col("ever_inlier")).select("id").orderBy("id")
     )
@@ -468,5 +506,10 @@ def detect(
         F.count(F.lit(1)).alias("n_points"),
     )
     return DetectionResult(
-        evaluations=evals, outliers=outliers, per_point=per_point, stats=stats
+        outliers=outliers,
+        per_point=per_point,
+        stats=stats,
+        build_evaluations=lambda: evaluations(
+            pts, slide_counts, cfg, n_batches(points, cfg)
+        ),
     )

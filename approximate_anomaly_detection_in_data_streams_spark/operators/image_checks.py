@@ -446,6 +446,32 @@ def decode_digests(images: DataFrame, ordinal_col: str | None = None) -> DataFra
     return df.mapInArrow(_digest_kernel, DIGEST_SCHEMA)
 
 
+# Bytes of row groups one decode task takes on: the production parquet
+# row-group target, where one task per row group is the right grain.
+DECODE_TASK_BYTES = 128 << 20
+
+
+def decode_task_count(
+    n_splits: int, total_bytes: int, par: int, splits_per_task: int | None = None
+) -> int:
+    """Python tasks for a payload-local decode of ``n_splits`` row groups
+    holding ``total_bytes`` (uncompressed) at ``par`` cores.
+
+    Every Python task pays a fixed cost whatever its payload: 120-250 ms
+    on a 4-vCPU host (an identity mapInArrow over 1000 rows in 16 tasks
+    takes 0.77-0.98 s against 41-70 ms for the JVM-only job). So the task
+    count follows the data: one task per ``DECODE_TASK_BYTES`` of row
+    groups, at least one per core, never more than one per row group. A
+    small table decodes in one wave; a lake-scale table still gets about
+    one production row group per task. An explicit ``splits_per_task``
+    overrides (tests pin it).
+    """
+    if splits_per_task is not None:
+        return max(1, n_splits // max(splits_per_task, 1))
+    by_bytes = -(-total_bytes // DECODE_TASK_BYTES)
+    return max(1, min(n_splits, max(par, by_bytes)))
+
+
 def decode_digests_parquet(
     spark, path: str, batch_rows: int = 8192, splits_per_task: int | None = None
 ) -> DataFrame:
@@ -465,7 +491,7 @@ def decode_digests_parquet(
     enumeration (sources/tables.py seam).
 
     Driver cost is metadata-only (one footer read per file). The split
-    list is hash-distributed over ``len(splits)`` tasks; row-group
+    list is dealt round-robin over ``decode_task_count`` tasks; row-group
     granularity bounds task memory by the writer's row-group size.
     """
     import glob as _glob
@@ -481,26 +507,20 @@ def decode_digests_parquet(
     if not files:
         raise ValueError(f"no parquet files under {path}")
     splits = []
+    total_bytes = 0
     for f in files:
         meta = _pq.ParquetFile(f).metadata
         splits.extend((f, rg) for rg in range(meta.num_row_groups))
-    # round-robin repartition: hashing (path, rg) into len(splits)
-    # partitions would leave ~1/e of tasks empty and give stragglers 2-3
-    # row groups (measured +15% stage wall); round-robin places exactly
-    # splits_per_task splits per task
-    if splits_per_task is None:
-        # Bin-pack splits into ~4 waves per core: every Python task pays a
-        # fixed runner handshake (~0.16 s on this guest, measured with an
-        # identity mapInArrow — payload-independent), so one task per row
-        # group is right only when row groups are written at the production
-        # ~128 MB target. Small-file tables (the sandbox generator writes
-        # 781-row groups) would otherwise serialize 128 x 0.16 s of pure
-        # handshake at 1 CPU — 6x the kernel itself. Four waves keeps skew
-        # headroom; an explicit splits_per_task overrides (tests pin it).
-        par = max(spark.sparkContext.defaultParallelism, 1)
-        n_tasks = max(1, min(len(splits), 4 * par))
-    else:
-        n_tasks = max(1, len(splits) // max(splits_per_task, 1))
+        total_bytes += sum(
+            meta.row_group(rg).total_byte_size for rg in range(meta.num_row_groups)
+        )
+    # round-robin repartition: hashing (path, rg) into n_tasks partitions
+    # would leave ~1/e of tasks empty and give stragglers 2-3 row groups
+    # (measured +15% stage wall); round-robin deals the splits evenly
+    n_tasks = decode_task_count(
+        len(splits), total_bytes, spark.sparkContext.defaultParallelism,
+        splits_per_task,
+    )
     sdf = spark.createDataFrame(splits, "path string, rg int").repartition(n_tasks)
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]

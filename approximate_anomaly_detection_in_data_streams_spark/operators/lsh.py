@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
-from .pairs import _mask_bin_counts
+from .pairs import _mask_bin_counts, block_partitions
 
 def make_projections(
     cfg: DetectorConfig, dim: int
@@ -323,9 +323,7 @@ def _lsh_counts_blocked(
     max_gap = cfg.ws - 1
     r2 = float(cfg.r) ** 2
 
-    sp = int(
-        points_with_slide.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
+    n_parts = block_partitions(cfg, points_with_slide.sparkSession)
     # home row in its own block; guest row fanned to the previous block —
     # cross-block pairs are counted in the lower block's group exactly once.
     # ONE explode, not a self-union: a union re-reads (and re-shuffles) the
@@ -348,9 +346,9 @@ def _lsh_counts_blocked(
     )
     # the L*m hash expressions run AFTER the g-shuffle: the parquet scan
     # may have only a couple of splits (row-group granularity), while the
-    # post-exchange projection fuses into the (sp-way parallel) kernel
+    # post-exchange projection fuses into the (n_parts-way parallel) kernel
     # stage — the scan-side stage only fans narrow rows into the shuffle.
-    keyed = with_bucket_key_ints(fanned.repartition(sp, "g"), cfg, dim)
+    keyed = with_bucket_key_ints(fanned.repartition(n_parts, "g"), cfg, dim)
 
     def emit(batches):
         import pyarrow as pa

@@ -306,12 +306,29 @@ def exact_neighbor_counts(
                 }
             )
 
-    sp = int(
-        points_with_slide.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
-    )
     # no sortWithinPartitions: the kernel lexsorts its whole partition by
     # (g, id) anyway, so a JVM sort before it is pure waste
-    return fanned.repartition(sp, "g").mapInArrow(emit, COUNT_SCHEMA)
+    n_parts = block_partitions(cfg, points_with_slide.sparkSession)
+    return fanned.repartition(n_parts, "g").mapInArrow(emit, COUNT_SCHEMA)
+
+
+def block_partitions(cfg: DetectorConfig, spark) -> int:
+    """Partitions for a banded block kernel's g-shuffle: one per W-block,
+    at most one per core (one wave).
+
+    Every Python task pays a fixed cost whatever its payload (an empty one
+    included), so a tiny stream must not fan out to a fixed partition
+    count; but the per-block distance work is compute-heavy, so a long
+    stream must fill every core. AQE's byte rule cannot size this shuffle:
+    narrow rows coalesce by bytes to a couple of tasks (100k dim-1 points:
+    2 tasks at local[32]). The block count is ceil(n / W), known at plan
+    time from ``cfg.n_total``; without it the stream length is unknown
+    and the kernel takes one wave.
+    """
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    if not cfg.n_total:
+        return par
+    return max(1, min(-(-cfg.n_total // cfg.w), par))
 
 
 def pairs_to_counts(pairs: DataFrame) -> DataFrame:

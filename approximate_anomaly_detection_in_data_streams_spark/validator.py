@@ -190,7 +190,8 @@ def validate_images(
     ).select("image_id", (F.col("id") - 1).alias("ordinal"))
     anomaly_outliers = anom_rows.orderBy("ordinal")
     drift_slides = profile_drift_slides(
-        feats, cfg.drift_slide_size, cfg.drift_l1_limit, dim=2 + N_HIST_BINS
+        feats, cfg.drift_slide_size, cfg.drift_l1_limit, dim=2 + N_HIST_BINS,
+        persisted_out=persisted,
     )
 
     row_violations = checks.where("is_violation").select(
@@ -244,7 +245,11 @@ def validate_images(
 
 
 def profile_drift_slides(
-    feats: DataFrame, slide_size: int, l1_limit: float, dim: int | None = None
+    feats: DataFrame,
+    slide_size: int,
+    l1_limit: float,
+    dim: int | None = None,
+    persisted_out: list | None = None,
 ) -> DataFrame:
     """Per-slide distribution-drift check (sustained-shift detector).
 
@@ -267,7 +272,10 @@ def profile_drift_slides(
     is 10M narrow shuffle rows removed, the exact allocation-heavy
     pattern the host punishes (BENCH.md round-3 forensics). Falls back to
     posexplode + two-level aggregation when ``dim`` is None (unknown
-    width)."""
+    width).
+
+    The per-slide table is persisted (two consumers); pass
+    ``persisted_out`` (a list) to receive it for a later ``.unpersist()``."""
     slide_col = (F.col("ordinal") / F.lit(slide_size)).cast("long").alias("slide")
     if dim is not None:
         per_slide = feats.select(slide_col, "features").groupBy("slide").agg(
@@ -277,6 +285,8 @@ def profile_drift_slides(
         from pyspark import StorageLevel
 
         per_slide = per_slide.persist(StorageLevel.MEMORY_AND_DISK)
+        if persisted_out is not None:
+            persisted_out.append(per_slide)
         glob = per_slide.groupBy().agg(
             F.sum("n").alias("gn"),
             *[F.sum(f"s{i}").alias(f"g{i}") for i in range(dim)],
@@ -301,6 +311,8 @@ def profile_drift_slides(
         from pyspark import StorageLevel
 
         per_slide = per_slide.persist(StorageLevel.MEMORY_AND_DISK)
+        if persisted_out is not None:
+            persisted_out.append(per_slide)
         global_profile = per_slide.groupBy("dim").agg(
             (F.sum("slide_sum") / F.sum("n")).alias("global_mean")
         )

@@ -194,8 +194,11 @@ def test_run_validation_resumes_without_rework(spark, tmp_path):
     ref = generate_reference(spark, cfg)
     ck = str(tmp_path / "ck")
 
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
     ledger1 = run_validation(spark, images, ck, reference=ref, cfg=vcfg)
     assert set(ledger1) == {"raw", "qnt", "jpeg"}
+    # every validated partition released its cached stages
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
     stamps1 = {k: v.finished_at for k, v in ledger1.items()}
 
     # second run: everything skipped (markers + matching fingerprints)
@@ -433,6 +436,34 @@ def test_validate_images_payload_path_matches_dataframe_path(spark, tmp_path):
         not (df.storageLevel.useMemory or df.storageLevel.useDisk)
         for df in cached
     )
+
+
+def test_decode_task_count_follows_bytes():
+    """Payload-local decode sizing: one task per 128 MiB of row groups, at
+    least one per core, at most one per row group; splits_per_task
+    overrides."""
+    from approximate_anomaly_detection_in_data_streams_spark.operators.image_checks import (
+        DECODE_TASK_BYTES as MIB128,
+        decode_task_count,
+    )
+
+    # tiny tables: fewer row groups than cores -> one task per row group
+    assert decode_task_count(1, 10_000, 4) == 1
+    assert decode_task_count(3, 3 * 1024, 8) == 3
+    assert decode_task_count(0, 0, 4) == 1
+    # small table, many small row groups: one wave (one task per core)
+    assert decode_task_count(16, 40 << 20, 4) == 4
+    assert decode_task_count(128, 500 << 20, 4) == 4
+    # many production-size row groups: one 128 MiB group per task
+    assert decode_task_count(64, 64 * MIB128, 4) == 64
+    assert decode_task_count(200, 100 * MIB128, 4) == 100
+    assert decode_task_count(10, 10 * MIB128 + 1, 4) == 10
+    # oversized row groups never split below one task per group
+    assert decode_task_count(5, 50 * MIB128, 4) == 5
+    # explicit splits_per_task wins over the byte rule
+    assert decode_task_count(16, 40 << 20, 4, splits_per_task=2) == 8
+    assert decode_task_count(16, 40 << 20, 4, splits_per_task=1) == 16
+    assert decode_task_count(3, 64 * MIB128, 4, splits_per_task=8) == 1
 
 
 def test_decode_digests_parquet_multi_rowgroup(spark, tmp_path):

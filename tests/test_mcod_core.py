@@ -134,6 +134,34 @@ def test_fused_per_point_equals_evaluation_aggregation(spark, gauss2d):
     assert fused == via_evals
 
 
+def test_in_plan_batch_count_equals_known(spark, gauss2d):
+    """per_point_verdicts without b_total derives the batch count in-plan
+    from max(id); it must equal passing n_batches' value, on both the
+    pivoted (ws <= 24) and higher-order paths, with a partial last slide
+    (n not a multiple of S) where the clamp at B decides verdicts."""
+    from approximate_anomaly_detection_in_data_streams_spark.operators.detector import (
+        per_point_verdicts,
+    )
+    from approximate_anomaly_detection_in_data_streams_spark.operators.pairs import (
+        exact_neighbor_counts,
+    )
+    from approximate_anomaly_detection_in_data_streams_spark.operators.windows import (
+        n_batches,
+        with_slide,
+    )
+
+    for w, s in ((100, 20), (120, 4)):  # ws=5 (pivoted), ws=30 (array path)
+        cfg = DetectorConfig(w=w, slide=s, r=0.5, k=8)
+        points = to_points_df(spark, gauss2d[: len(gauss2d) - s // 2 - 1])
+        pts = with_slide(points, cfg)
+        counts = exact_neighbor_counts(pts, cfg)
+        known = per_point_verdicts(pts, counts, cfg, n_batches(points, cfg))
+        in_plan = per_point_verdicts(pts, counts, cfg)
+        assert sorted(map(tuple, in_plan.collect())) == sorted(
+            map(tuple, known.collect())
+        ), (w, s)
+
+
 def test_pivoted_verdicts_equal_higher_order(spark, gauss2d):
     """The unrolled conditional-sum verdict path must agree with the
     higher-order array formulation on every point (same counts input).

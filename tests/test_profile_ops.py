@@ -514,6 +514,82 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
     assert jobs == [], f"plan construction ran Spark jobs: {jobs}"
 
 
+def test_validate_images_builds_no_jobs(spark):
+    """validate_images only assembles lineage: with its inputs already
+    built, constructing the report must trigger ZERO Spark jobs — the
+    drift detector's batch count (cfg.n_total unset) is derived in-plan,
+    not by a blocking max(id) job."""
+    from approximate_anomaly_detection_in_data_streams_spark.sources.images import (
+        ImageTableConfig,
+        generate_images,
+        generate_reference,
+    )
+    from approximate_anomaly_detection_in_data_streams_spark.validator import (
+        ImageValidatorConfig,
+        validate_images,
+    )
+
+    tcfg = ImageTableConfig(n=200, seed=3, partitions=2)
+    images = generate_images(spark, tcfg)
+    reference = generate_reference(spark, tcfg)
+    vcfg = ImageValidatorConfig(drift=DetectorConfig(w=100, slide=25, r=40.0, k=4))
+    sc = spark.sparkContext
+    sc.setJobGroup("validator-build", "assert no jobs during validate_images")
+    try:
+        report = validate_images(images, reference, vcfg)
+    finally:
+        sc.setJobGroup("done", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("validator-build")
+    try:
+        assert jobs == [], f"validate_images ran Spark jobs: {jobs}"
+        report.anomaly_outliers.collect()  # the in-plan batch count runs
+    finally:
+        report.unpersist_all()
+
+
+def test_exact_counts_python_stage_sized_by_data(spark):
+    """The exact count kernel's Python stage runs one task per W-block, at
+    most one per core — not spark.sql.shuffle.partitions mostly-empty
+    Python tasks. The block count is ceil(n_total / W); an unknown stream
+    length (n_total = 0) takes one wave."""
+    from approximate_anomaly_detection_in_data_streams_spark.operators.pairs import (
+        block_partitions,
+        exact_neighbor_counts,
+    )
+    from approximate_anomaly_detection_in_data_streams_spark.operators.windows import (
+        with_slide,
+    )
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    X = np.random.default_rng(5).normal(0, 0.3, size=(1000, 2))
+    points = spark.createDataFrame(
+        [(i + 1, [float(v) for v in row]) for i, row in enumerate(X)],
+        "id long, features array<double>",
+    )
+    tracker = sc.statusTracker()
+    for w, n_total, want in (
+        (500, 1000, min(2, par)),  # two blocks
+        (100, 1000, min(10, par)),  # ten blocks
+        (100, 0, par),  # length unknown: one wave
+    ):
+        cfg = DetectorConfig(w=w, slide=20, r=0.5, k=4, n_total=n_total)
+        assert block_partitions(cfg, spark) == want
+        counts = exact_neighbor_counts(with_slide(points, cfg), cfg)
+        group = f"exact-counts-{w}-{n_total}"
+        sc.setJobGroup(group, "task count of the exact count kernel")
+        try:
+            rows = counts.collect()
+        finally:
+            sc.setJobGroup("done", "")
+        assert rows
+        # collect() adds no exchange after the kernel, so the Python stage
+        # is the result stage: the newest stage of the group's last job
+        last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+        kernel_stage = tracker.getStageInfo(max(last_job.stageIds))
+        assert kernel_stage.numTasks == want, (w, n_total, kernel_stage)
+
+
 def test_simhash_fast_tier_preserves_hamming_geometry(spark):
     """The vectorized 'fast' shingle hash is a different member of the
     hash family than the portable md5 tier, but the hamming GEOMETRY must
