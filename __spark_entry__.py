@@ -174,10 +174,10 @@ def q_mcod_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lshod_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded LSH approximate detector (J4/X3). The p-stable bucket keys
-    are pure JVM expressions with the seeded Gaussian coefficients as
-    float literals (operators/lsh.py), so the SQL twin re-derives
-    bit-identical keys from the same literals — the approximate LSH
-    detector is exactly oracle-checked end to end."""
+    fold the seeded Gaussian coefficients left to right
+    (operators/lsh.py::bucket_keys), so the SQL twin re-derives
+    bit-identical keys from the same coefficients as float literals —
+    the approximate LSH detector is exactly oracle-checked end to end."""
     return _detection(spark, sf_dir, "lshod").outliers
 
 

@@ -4,8 +4,9 @@ Maps the reference's four algorithms (/root/reference/src/Executor.java:98-110)
 onto pair-generation strategies feeding one shared classification pipeline:
 
   mcod           -> exact banded blockwise self-join (operators/pairs.py)
-  lshod          -> seeded LSH bucket equi-join, 4 hashes / 10 tables / w=R
-                    (/root/reference/src/Executor.java:102-105)
+  lshod          -> the same block kernel restricted to pairs colliding in
+                    a seeded LSH table (operators/lsh.py), 4 hashes /
+                    10 tables / w=R (reference src/Executor.java:102-105)
   approx_mclshod -> seeded LSH, 5 hashes / 10 tables / w=3R/2
                     (/root/reference/src/Executor.java:106-109)
   approx_mcod    -> per-window bounded active set with seeded safe-inlier-

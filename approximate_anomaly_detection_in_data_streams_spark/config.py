@@ -37,14 +37,13 @@ class DetectorConfig:
     num_tables: int = 10  # LSH tables
     bucket_width: float = 0.0  # LSH p-stable bucket width w; 0 -> derived from r
     seed: int = 42
-    # feature dimensionality; 0 = infer from the data. Carrying it here
-    # keeps plan construction free of driver-side actions (the reference
-    # probes the first stream object, src/core/Stream.java:16-22 — in
-    # Spark that probe would be an eager job per plan build).
+    # feature dimensionality; 0 = infer from the data (the batch kernels
+    # read it from their feature matrix; a keyed stream from a key's first
+    # non-empty vector — the reference probes the first stream object,
+    # src/core/Stream.java:16-22).
     dim: int = 0
     # total stream length (max id); 0 = infer with one agg(max(id)) job at
-    # plan-build time. Same rationale as ``dim``: the reference's finite
-    # stream knows its own length (src/core/Stream.java:24-26), and in
+    # plan-build time. The reference's finite stream knows its own length (src/core/Stream.java:24-26), and in
     # Spark the inference is a driver-blocking job per detection call —
     # callers that know n pass it and query construction runs zero jobs
     # (asserted by tests/test_profile_ops.py::test_plan_build_runs_no_jobs).

@@ -2,8 +2,7 @@
 MinHash+LSH, SimHash, embedding-cosine near-dup.
 
 Training-data-pipeline superset (not present in the reference, which has no
-string data at all — SURVEY.md section 1.2); the LSH band-join here shares
-its shape with the detector's bucket equi-join (operators/lsh.py): turn a
+string data at all — SURVEY.md section 1.2); the LSH band-join here turns a
 theta-join (similarity >= t) into candidate equi-join + exact post-filter.
 
 Scale notes (the 100 TB framing):
@@ -843,7 +842,11 @@ def minhash_lsh_pairs(
     # module: plans must be executed before building the next one.
     with _LIVE_SIG_LOCK:
         while _LIVE_SIG:
-            _LIVE_SIG.pop().unpersist()
+            prev = _LIVE_SIG.pop()
+            # a stopped session's frames hold nothing to release, and
+            # unpersist() on them raises (its block manager is gone)
+            if prev.sparkSession.sparkContext._jsc is not None:
+                prev.unpersist()
     sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64"))
     if df.rdd.getNumPartitions() < sp // 2:
         df = df.repartition(sp)

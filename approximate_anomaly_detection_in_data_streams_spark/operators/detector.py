@@ -1,9 +1,9 @@
 """Windowed distance-outlier detector: classification + violation assembly.
 
 Re-expresses the MCOD semantics (/root/reference/src/algorithms/MCOD.java) as
-per-batch recomputation over a neighbor-pair table instead of incremental
-index maintenance. A point's status at any moment is fully determined by the
-window content (count of neighbors within R >= k,
+per-batch recomputation over slide-binned neighbor counts instead of
+incremental index maintenance. A point's status at any moment is fully
+determined by the window content (count of neighbors within R >= k,
 /root/reference/src/algorithms/MCOD.java:69-78); the reference's event queue,
 micro-clusters and PD index (W3/J6/A9 in SURVEY.md) exist only to make
 single-threaded incrementality fast and contribute nothing to the semantics.
@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DetectorConfig
-from .pairs import exact_neighbor_counts, pairs_to_counts
+from .pairs import exact_neighbor_counts
 from .windows import n_batches, point_batches, with_slide
 
 
@@ -470,24 +470,21 @@ def batch_diagnostics(points: DataFrame, cfg: DetectorConfig) -> DataFrame:
 def detect(
     points: DataFrame,
     cfg: DetectorConfig,
-    pairs: DataFrame | None = None,
     slide_counts: DataFrame | None = None,
 ) -> DetectionResult:
     """Run the full detector.
 
-    ``slide_counts`` may inject a pre-binned count table directly (the
-    LSH variants' bucket kernel emits one — operators/lsh.py::
-    lsh_neighbor_counts); ``pairs`` may inject a raw neighbor-pair table.
-    The exact path skips pair materialization entirely and aggregates
-    slide-binned counts inside the block kernel. The verdict aggregation
+    ``slide_counts`` may inject a pre-binned count table (the LSH
+    variants' block kernel emits one — operators/lsh.py::
+    lsh_neighbor_counts); without it the exact block kernel
+    (operators/pairs.py::exact_neighbor_counts) bins the counts. No pair
+    table is ever materialized. The verdict aggregation
     uses the fused per-point path; ``evaluations`` is planned on first
     read, for diagnostics and property tests. Building the result runs no
     Spark job: without ``cfg.n_total`` the batch count is derived in-plan."""
     pts = with_slide(points, cfg)
     if slide_counts is None:
-        slide_counts = (
-            exact_neighbor_counts(pts, cfg) if pairs is None else pairs_to_counts(pairs)
-        )
+        slide_counts = exact_neighbor_counts(pts, cfg)
 
     per_point = per_point_verdicts(pts, slide_counts, cfg)
     outliers = (

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns: brute-force cosine top-k and
 an LSH-bucketed approximate variant (the scale path).
 
-Part of the training-data-pipeline superset. The bucketed variant reuses the
-detector's candidate-equi-join shape (operators/lsh.py; reference analog
+Part of the training-data-pipeline superset. The bucketed variant is an LSH
+candidate equi-join (reference analog
 /root/reference/src/core/lsh/LSHIndex.java:33-44): sign-random-projection
 buckets on the *unit sphere* (SRP-LSH approximates angular distance — the
 right family for cosine, vs the p-stable family the reference uses for
@@ -94,7 +94,7 @@ def srp_bucket_keys(
     order: IEEE addition is deterministic for a fixed order, so an oracle
     re-deriving the dots as an explicit SQL sum over the same float
     literals sees bit-identical signs — the same portability trick as the
-    LSHOD bucket keys (operators/lsh.py::with_bucket_keys). Still fully
+    LSHOD bucket keys (operators/lsh.py::bucket_keys). Still fully
     vectorized: dim in-place (n x tables*bits) multiply-adds.
     """
     A = srp_projections(dim, bits, tables, seed)

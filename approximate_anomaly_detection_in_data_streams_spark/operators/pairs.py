@@ -37,6 +37,36 @@ CHUNK = 1024
 COUNT_SCHEMA = "i long, slide_i long, slide_j long, c long, c_arr long"
 
 
+def feature_matrix(col) -> np.ndarray:
+    """(n, d) float64 matrix of an Arrow list column, read from its flat
+    value buffer — per-row list conversion would build n tiny object
+    ndarrays, which cost more than the distance math (see
+    ``exact_neighbor_counts``). Every row must hold ``d`` values."""
+    col = col.combine_chunks()
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    if len(widths) and (widths != widths[0]).any():
+        raise ValueError(
+            f"feature vectors differ in length: {sorted(set(widths.tolist()))}"
+        )
+    d = int(widths[0]) if len(widths) else 0
+    return flat.reshape(len(widths), d).astype(np.float64, copy=False)
+
+
+def count_batch(parts: list[tuple[np.ndarray, ...]]):
+    """One Arrow batch in ``COUNT_SCHEMA`` from a kernel's per-block
+    (i, slide_i, slide_j, c, c_arr) ndarray tuples."""
+    import pyarrow as pa
+
+    cols = [np.concatenate([p[k] for p in parts]) for k in range(5)]
+    return pa.RecordBatch.from_pydict(
+        {
+            name: pa.array(col, type=pa.int64())
+            for name, col in zip(("i", "slide_i", "slide_j", "c", "c_arr"), cols)
+        }
+    )
+
+
 def _mask_bin_counts(
     M: np.ndarray,
     ids: np.ndarray,
@@ -46,7 +76,7 @@ def _mask_bin_counts(
 ) -> list[tuple[np.ndarray, ...]]:
     """Bin a boolean neighbor mask by neighbor slide — the slide-grouped
     slice-sum scheme of ``_counts_emit`` for callers that already hold a
-    full n x n mask (the LSH bucket kernel): rows of one slide share
+    full n x n mask (the LSH block kernel): rows of one slide share
     their per-bin column ranges, guest rows (an id-sorted suffix — home
     rows are the prefix ``[:n_home]``) clamp their bins to the home
     prefix, and ``c_arr``'s strict id_j < id_i bound is full count /
@@ -265,18 +295,7 @@ def exact_neighbor_counts(
         id_arr = tbl.column("id").to_numpy(zero_copy_only=False)
         slides_all = tbl.column("slide").to_numpy(zero_copy_only=False)
         home_all = tbl.column("is_home").to_numpy(zero_copy_only=False)
-        feats = tbl.column("features").combine_chunks()
-        flat = feats.flatten().to_numpy(zero_copy_only=False)
-        offs = feats.offsets.to_numpy(zero_copy_only=False)
-        widths = np.diff(offs)
-        if len(widths) and (widths == widths[0]).all():
-            X_all = flat.reshape(len(widths), int(widths[0])).astype(
-                np.float64, copy=False
-            )
-        else:  # ragged features: fall back to per-row assembly
-            X_all = np.stack(
-                [flat[offs[i] : offs[i + 1]] for i in range(len(offs) - 1)]
-            ).astype(np.float64)
+        X_all = feature_matrix(tbl.column("features"))
         order = np.lexsort((id_arr, g_arr))
         g_arr, id_arr = g_arr[order], id_arr[order]
         slides_all = slides_all[order]
@@ -295,16 +314,7 @@ def exact_neighbor_counts(
                 )
             )
         if parts:
-            cols = [np.concatenate([p[k] for p in parts]) for k in range(5)]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "i": pa.array(cols[0], type=pa.int64()),
-                    "slide_i": pa.array(cols[1], type=pa.int64()),
-                    "slide_j": pa.array(cols[2], type=pa.int64()),
-                    "c": pa.array(cols[3], type=pa.int64()),
-                    "c_arr": pa.array(cols[4], type=pa.int64()),
-                }
-            )
+            yield count_batch(parts)
 
     # no sortWithinPartitions: the kernel lexsorts its whole partition by
     # (g, id) anyway, so a JVM sort before it is pure waste
@@ -329,12 +339,3 @@ def block_partitions(cfg: DetectorConfig, spark) -> int:
     if not cfg.n_total:
         return par
     return max(1, min(-(-cfg.n_total // cfg.w), par))
-
-
-def pairs_to_counts(pairs: DataFrame) -> DataFrame:
-    """Adapt a raw neighbor-pair table (i, j, slide_i, slide_j — both
-    directions) to the count shape the detector consumes."""
-    return pairs.groupBy("i", "slide_i", "slide_j").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(F.when(F.col("j") < F.col("i"), 1).otherwise(0)).alias("c_arr"),
-    )

@@ -209,11 +209,11 @@ class LSHSlideDetector(SlideDetector):
     /root/reference/src/algorithms/LSHOD.java:85-103,
     /root/reference/src/core/lsh/LSHIndex.java:33-44), with the exact
     distance predicate applied to candidates only. Projections come from
-    the SAME ``make_projections(cfg, dim)`` seed as the batch path, and
-    each hash's dot product accumulates left-to-right over dims — the
-    identical IEEE op order as the batch path's JVM fold — so bucket keys
-    (and therefore the outlier set) are bit-equivalent to the batch LSHOD
-    detector (tests/test_streaming.py::test_lshod_slide_loop_matches_batch).
+    the SAME ``make_projections(cfg, dim)`` seed as the batch path and
+    keys from the same ``bucket_keys`` function the batch kernel calls,
+    so bucket keys (and therefore the outlier set) are bit-equivalent to
+    the batch LSHOD detector
+    (tests/test_streaming.py::test_lshod_slide_loop_matches_batch).
     Keys are computed once per point, on arrival.
     """
 
@@ -236,13 +236,10 @@ class LSHSlideDetector(SlideDetector):
         self._keys = self._hash(self._X if self._X is not None else np.empty((0, self.dim)))
 
     def _hash(self, X: np.ndarray) -> np.ndarray:
-        """(L, m, n) bucket keys: floor((a . x + b) / w), the dot product
-        folded left to right over dims."""
-        A = self._A
-        acc = X[:, 0] * A[:, :, 0, None]
-        for j in range(1, A.shape[2]):
-            acc = acc + X[:, j] * A[:, :, j, None]
-        return np.floor((acc + self._b[:, :, None]) / float(self.cfg.lsh_bucket_width))
+        """(L, m, n) bucket keys of the (n, dim) points."""
+        from ..operators.lsh import bucket_keys
+
+        return bucket_keys(X, self._A, self._b, self.cfg.lsh_bucket_width)
 
     def _append(self, ids: np.ndarray, X: np.ndarray) -> None:
         super()._append(ids, X)
@@ -290,7 +287,6 @@ def run_structured_stream(
     input_dir: str,
     cfg: DetectorConfig,
     checkpoint_dir: str,
-    dim: int,
 ) -> dict:
     """Structured Streaming driver for a single unkeyed point stream.
 
@@ -300,8 +296,7 @@ def run_structured_stream(
     stream becomes one key, a sentinel file (id = -n_total, derived from a
     batch scan of the same directory) marks the finite stream's end, and
     the keyed flush returns the same result dict the old driver-side loop
-    produced. ``dim`` is kept for signature compatibility; the schema
-    carries it.
+    produced. The key's dim comes from ``cfg.dim`` or from the stream.
     """
     import json as _json
     import os

@@ -37,11 +37,10 @@ java.util.Random and iterates a JVM-order HashSet):
 
 Role in the engine: this is the semantic anchor for the approximate
 variants (the distributed batch analog in operators/approx_mcod.py is
-validated against it) and the per-key kernel for keyed streaming — one
-stream's state is bounded by W + pd_limit, and a 1000-executor deployment
-runs one engine per key inside applyInPandasWithState
-(streaming/keyed.py). It is intentionally sequential: the reference
-algorithm's eviction state is order-dependent by construction.
+validated against it). Keyed streaming does not run it: streaming/keyed.py
+holds one ``make_slide_detector`` engine (streaming/incremental.py) per
+key. It is intentionally sequential: the reference algorithm's eviction
+state is order-dependent by construction.
 """
 
 from __future__ import annotations

@@ -477,10 +477,44 @@ def test_minhash_null_and_empty_text(spark):
         assert got == {(4, 5, 1.0)}
 
 
+def test_minhash_skips_tables_of_stopped_session(spark):
+    """Tables persisted by a call under an earlier, stopped SparkSession
+    are dropped without unpersist(): on such a frame it raises (the
+    stopped context's block manager is gone), which used to fail every
+    minhash_lsh_pairs call after a session restart."""
+    from types import SimpleNamespace
+
+    from approximate_anomaly_detection_in_data_streams_spark.operators import dedup
+
+    class _StoppedFrame:
+        sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+
+        def unpersist(self):
+            raise RuntimeError("unpersist on a stopped session")
+
+    stale = _StoppedFrame()
+    with dedup._LIVE_SIG_LOCK:
+        dedup._LIVE_SIG.append(stale)
+    df = spark.createDataFrame(
+        [(1, "a real document body here"), (2, "a real document body here"),
+         (3, "something else entirely")],
+        "doc_id long, text string",
+    )
+    got = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in dedup.minhash_lsh_pairs(
+            df, "doc_id", "text", 3, threshold=0.5, block_size=64
+        ).collect()
+    }
+    assert got == {(1, 2, 1.0)}
+    assert all(f is not stale for f in dedup._LIVE_SIG)
+
+
 def test_plan_build_runs_no_jobs(spark, sf_dir):
-    """With dim and n_total carried in DetectorConfig, constructing every
+    """With n_total carried in DetectorConfig, constructing every
     detector query plan must trigger ZERO Spark jobs (no driver-blocking
-    agg/first at plan-build time). Asserted via a dedicated job group."""
+    agg/first at plan-build time), whether or not cfg.dim is set.
+    Asserted via a dedicated job group."""
     from approximate_anomaly_detection_in_data_streams_spark.api import (
         approx_mclshod_config,
         lshod_config,
@@ -501,6 +535,8 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
             DetectorConfig(w=400, slide=100, r=15.0, k=10, dim=1, n_total=n),
             lshod_config(400, 100, 15.0, 10, dim=1, n_total=n),
             approx_mclshod_config(400, 100, 15.0, 10, dim=1, n_total=n),
+            # the batch LSH kernel reads dim from its data, not a probe job
+            lshod_config(400, 100, 15.0, 10, dim=0, n_total=n),
             DetectorConfig(
                 w=400, slide=100, r=15.0, k=10, algorithm="approx_mcod",
                 pd_limit=300, ar_factor=0.3, dim=1, n_total=n,

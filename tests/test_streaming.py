@@ -59,9 +59,7 @@ def test_structured_stream_matches_batch_detector(
                     )
                     + "\n"
                 )
-    res = run_structured_stream(
-        spark, str(src), CFG, str(tmp_path / "ck"), dim=2
-    )
+    res = run_structured_stream(spark, str(src), CFG, str(tmp_path / "ck"))
     assert res["outliers"] == outliers
     assert res["n_only_outlier"] == stats["n_only_outlier"]
 
@@ -120,7 +118,7 @@ def test_lshod_structured_stream_matches_batch(
                     + "\n"
                 )
     res = run_structured_stream(
-        spark, str(src), LSHOD_CFG, str(tmp_path / "ck_lshod"), dim=2
+        spark, str(src), LSHOD_CFG, str(tmp_path / "ck_lshod")
     )
     assert res["outliers"] == outliers
     assert res["n_only_outlier"] == stats["n_only_outlier"]
